@@ -487,11 +487,13 @@ def _write_full_dict(total: float, timings: dict[str, float], sf: object) -> Non
     The driver's stdout record keeps only a <=1900-char JSON line, so the
     cheapest per-query timings are omitted there (``queries_omitted``) and a
     regression in an omitted query would be invisible across rounds. This
-    writes ``BENCH_full_r{N}.json`` (N = 1 + the highest driver-committed
-    BENCH_r*.json round, i.e. the round in progress; override with
-    $SPARK_GRAFT_BENCH_FULL) so round-over-round comparisons always have
-    every timing. Best-effort: a read-only checkout must not break the
-    one-JSON-line driver contract."""
+    writes ``BENCH_full_r{N}_c{C}.json`` (N = 1 + the highest
+    driver-committed BENCH_r*.json round, i.e. the round in progress;
+    C = the local[] core count, so a scaling run at another width can
+    never take the round's file; override with $SPARK_GRAFT_BENCH_FULL)
+    so round-over-round comparisons always have every timing.
+    Best-effort: a read-only checkout must not break the one-JSON-line
+    driver contract."""
     try:
         repo = os.path.dirname(os.path.abspath(__file__))
         out = os.environ.get("SPARK_GRAFT_BENCH_FULL")
@@ -509,7 +511,11 @@ def _write_full_dict(total: float, timings: dict[str, float], sf: object) -> Non
                         rounds.append(int(f[len("BENCH_r"):-len(".json")]))
                     except ValueError:
                         pass
-            out = os.path.join(repo, f"BENCH_full_r{max(rounds) + 1:02d}.json")
+            # the same width get_spark() gives local[] for this process
+            cores = os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()
+            out = os.path.join(
+                repo, f"BENCH_full_r{max(rounds) + 1:02d}_c{cores}.json"
+            )
         with open(out, "w") as fh:
             json.dump(
                 {"metric": "headline_total_sec", "value": total, "unit": "sec",

@@ -36,12 +36,7 @@ from .io import (
     write_table,
 )
 from .logging_util import get_logger, setup_logging
-from .transform import (
-    observed_pipeline,
-    processing_stats,
-    transform,
-    validate_final_data,
-)
+from .transform import observed_pipeline, validate_final_data
 
 logger = get_logger(__name__)
 
@@ -141,10 +136,6 @@ def main(argv: list[str] | None = None) -> int:
     return 0 if report["success"] else 1
 
 
-if __name__ == "__main__":
-    sys.exit(main())
-
-
 def export_training_dataset(
     spark, sf_dir: str, out_path: str, min_tokens: int = 3
 ) -> None:
@@ -167,3 +158,7 @@ def export_training_dataset(
         .partitionBy("split", "shard")
         .parquet(out_path)
     )
+
+
+if __name__ == "__main__":
+    sys.exit(main())

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from ..io import load_table
 from .helpers import DEC, davg, dsum, materialize_reduced, sql_davg, sql_dsum
+from .sources import daily_cents
 
 QUERIES = {}
 ORACLES = {}
@@ -5441,15 +5442,7 @@ def agg_theil_sen_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     the |days| table."""
     from pyspark.sql import Window
 
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.to_date("o_orderdate").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
-    )
+    daily = daily_cents(spark, sf_dir)
     daily = materialize_reduced(daily)
     left = daily.select(
         "day",
@@ -6369,15 +6362,8 @@ def agg_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
     window over the |days|-bounded series."""
     from pyspark.sql import Window
 
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.to_date("o_orderdate").alias("day"))
-        .agg(
-            F.expr(
-                "CAST(sum(CAST(round(o_totalprice * 100, 0) AS BIGINT))"
-                " AS BIGINT) div 100"
-            ).alias("y")
-        )
+    daily = daily_cents(spark, sf_dir).select(
+        "day", F.expr("cents div 100").alias("y")
     )
     idx = daily.select(
         "day", "y", F.row_number().over(Window.orderBy("day")).alias("t")
@@ -6751,15 +6737,8 @@ def agg_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded median lookup, one lag window."""
     from pyspark.sql import Window
 
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.to_date("o_orderdate").alias("day"))
-        .agg(
-            F.expr(
-                "CAST(sum(CAST(round(o_totalprice * 100, 0) AS BIGINT))"
-                " AS BIGINT) div 100"
-            ).alias("y")
-        )
+    daily = daily_cents(spark, sf_dir).select(
+        "day", F.expr("cents div 100").alias("y")
     )
     daily = materialize_reduced(daily)
     per = daily.groupBy("y").agg(F.count("*").cast("bigint").alias("c"))
@@ -7262,15 +7241,7 @@ def agg_siegel_repeated_medians_banded(
     the |days|-bounded median table."""
     from pyspark.sql import Window
 
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.to_date("o_orderdate").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
-    )
+    daily = daily_cents(spark, sf_dir)
     daily = materialize_reduced(daily)
     left = daily.select(
         F.col("day").alias("day_i"),
@@ -7564,15 +7535,7 @@ def agg_extreme_spacings(spark: SparkSession, sf_dir: str) -> DataFrame:
     end."""
     from pyspark.sql import Window
 
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.to_date("o_orderdate").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
-    )
+    daily = daily_cents(spark, sf_dir)
     w = Window.orderBy("cents", "day")
     sp = daily.select(
         (F.col("cents") - F.lag("cents").over(w)).alias("gap"),
@@ -7861,15 +7824,7 @@ def agg_lag_sign_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     seasonality reads as lag-7 agreement above lag-1."""
     from pyspark.sql import Window
 
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.to_date("o_orderdate").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
-    )
+    daily = daily_cents(spark, sf_dir)
     delta = daily.select(
         "day",
         (F.col("cents") - F.lag("cents").over(Window.orderBy("day"))).alias(
@@ -8055,15 +8010,7 @@ def agg_turning_point_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup + one ordered window over the bounded spine."""
     from pyspark.sql import Window
 
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.to_date("o_orderdate").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
-    )
+    daily = daily_cents(spark, sf_dir)
     w = Window.orderBy("day")
     ctx = daily.select(
         "cents",
@@ -8293,15 +8240,7 @@ def agg_sen_slope_confidence_band(spark: SparkSession, sf_dir: str) -> DataFrame
     slope table — no new shuffle shape."""
     from pyspark.sql import Window
 
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.to_date("o_orderdate").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
-    )
+    daily = daily_cents(spark, sf_dir)
     daily = materialize_reduced(daily)
     left = daily.select(
         "day",
@@ -8453,15 +8392,7 @@ def agg_cox_stuart_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     output."""
     from pyspark.sql import Window
 
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.to_date("o_orderdate").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
-    )
+    daily = daily_cents(spark, sf_dir)
     daily = materialize_reduced(daily)
     idx = daily.select(
         "cents", F.row_number().over(Window.orderBy("day")).alias("rn")
@@ -8702,15 +8633,7 @@ def agg_bartels_rank_vn(spark: SparkSession, sf_dir: str) -> DataFrame:
     degenerate. One day rollup + two bounded windows + one reduce."""
     from pyspark.sql import Window
 
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.to_date("o_orderdate").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
-    )
+    daily = daily_cents(spark, sf_dir)
     rk = daily.select(
         "day",
         (
@@ -8812,15 +8735,7 @@ def agg_wallis_moore_phase(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = 4."""
     from pyspark.sql import Window
 
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.to_date("o_orderdate").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
-    )
+    daily = daily_cents(spark, sf_dir)
     daily = materialize_reduced(daily)
     seq = daily.select(
         "day",

@@ -21,6 +21,12 @@ from .helpers import (
     tvd_fixed_point_aggs,
     tvd_from_fixed_point,
 )
+from .sources import (
+    copurchase_edges,
+    customer_part_edges,
+    shared_customer_projection,
+    token_edges,
+)
 
 QUERIES = {}
 ORACLES = {}
@@ -1911,23 +1917,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct tokens (top-N) to bound the pair explode — the fixture's
     docs are far under any such cap. deg*(deg-1)/2 keeps SUM in BIGINT
     (one even factor, exact in both engines)."""
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.trim(F.col("text")) != ""
-    )
-    tok = docs.select(
-        "doc_id",
-        F.explode(_SPARK_TOKENS(F.lower(F.col("text")))).alias("token"),
-    ).distinct()
-    a, b = tok.alias("a"), tok.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.doc_id") == F.col("b.doc_id"))
-            & (F.col("a.token") < F.col("b.token")),
-        )
-        .select(F.col("a.token").alias("u"), F.col("b.token").alias("v"))
-        .distinct()
-    )
+    edges = token_edges(spark, sf_dir)
     deg = (
         edges.select(F.col("u").alias("node"))
         .unionAll(edges.select(F.col("v").alias("node")))
@@ -2397,27 +2387,7 @@ def graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     used here: the fixture vocabulary is a 31-node complete graph, which
     has no non-adjacent pairs to predict. Existing edges drop via an
     anti-join on the normalized a<b pair key."""
-    from pyspark.sql import Window
-
-    from .helpers import materialize_reduced
-
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    a, b = li.alias("a"), li.alias("b")
-    edges = materialize_reduced(
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(
-            F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v")
-        )
-        .distinct()
-    )
+    edges = copurchase_edges(spark, sf_dir)
     adj = edges.select(
         F.col("u").alias("node"), F.col("v").alias("nbr")
     ).unionAll(edges.select(F.col("v"), F.col("u")))
@@ -2546,25 +2516,7 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     k-core peeling's exact plan. Every round CTE is AS MATERIALIZED (a
     round-references-previous-round-twice chain re-expands exponentially
     under DuckDB's default CTE inlining)."""
-    from .helpers import materialize_reduced
-
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    a, b = li.alias("a"), li.alias("b")
-    edges = materialize_reduced(
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(
-            F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v")
-        )
-        .distinct()
-    )
+    edges = copurchase_edges(spark, sf_dir)
     n_edges0 = edges.count()
     deg0 = (
         edges.select(F.col("u").alias("node"))
@@ -2723,21 +2675,7 @@ def graph_hits_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-20 hubs (customers whose baskets span authoritative parts).
     Each round is one edge-keyed join + map-side-combinable sum —
     O(|E|) per round, the cluster HITS plan."""
-    from .helpers import materialize_reduced
-
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey"
-    )
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    edges = materialize_reduced(
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .select(
-            F.col("o_custkey").alias("cust"), F.col("l_partkey").alias("part")
-        )
-        .distinct()
-    )
+    edges = materialize_reduced(customer_part_edges(spark, sf_dir))
     a1 = edges.groupBy("part").agg(F.count("*").cast("bigint").alias("a"))
     h1 = (
         edges.join(a1, "part")
@@ -3185,26 +3123,7 @@ def graph_degree_assortativity(
     table is |parts|-bounded and broadcast to the edge list; the edge
     list itself comes from the co-partitioned per-order pair join the
     basket family already established."""
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    a = li.alias("a")
-    b = li.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(
-            F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v")
-        )
-        .distinct()
-    )
-    # edges feeds the adjacency twice plus the edge count
-    edges = edges.localCheckpoint()
+    edges = copurchase_edges(spark, sf_dir)
     adj = edges.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionAll(
         edges.select(F.col("v").alias("src"), F.col("u").alias("dst"))
     )
@@ -3298,24 +3217,7 @@ def graph_modularity_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     penalty (LEFT join, COALESCE). Work: the basket-family pair join
     builds edges once; everything after runs on |parts|- and
     |brands|-bounded tables, broadcast-joinable at any scale."""
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    a, b = li.alias("a"), li.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(
-            F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v")
-        )
-        .distinct()
-        .localCheckpoint()
-    )
+    edges = copurchase_edges(spark, sf_dir)
     nc = load_table(spark, sf_dir, "part").select(
         F.col("p_partkey").alias("node"), F.col("p_brand").alias("c")
     )
@@ -3439,25 +3341,7 @@ def graph_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     hold — per-node coefficients over a deterministic stratum are the
     standard estimator (at cluster scale, raise the modulus toward 1
     or cap per-node out-degree instead)."""
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .filter(F.col("l_orderkey") % 4 == 0)
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    a, b = li.alias("a"), li.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(
-            F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v")
-        )
-        .distinct()
-        .localCheckpoint()
-    )
+    edges = copurchase_edges(spark, sf_dir, stratum=4)
     # |V|-row degree table feeds three branches (both orientation join
     # sides and the final coefficient join): materialize once instead of
     # re-running the degree-count shuffle per consumer
@@ -3577,24 +3461,7 @@ def graph_bfs_khop(spark: SparkSession, sf_dir: str) -> DataFrame:
     MATERIALIZED per the fixed-point contract in
     docs/ITERATIVE_PARITY.md. Emits one row per hop with the newly
     reached count."""
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    a, b = li.alias("a"), li.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(
-            F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v")
-        )
-        .distinct()
-        .localCheckpoint()
-    )
+    edges = copurchase_edges(spark, sf_dir)
     adj = (
         edges.select(F.col("u").alias("src"), F.col("v").alias("dst"))
         .unionAll(edges.select(F.col("v").alias("src"), F.col("u").alias("dst")))
@@ -3810,24 +3677,7 @@ def graph_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast semi-joins of the 100-row club against the edge list —
     at 100 TB this is the same bounded-dimension pattern as every
     audit in the family."""
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    a, b = li.alias("a"), li.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(
-            F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v")
-        )
-        .distinct()
-        .localCheckpoint()
-    )
+    edges = copurchase_edges(spark, sf_dir)
     deg = (
         edges.select(F.col("u").alias("node"))
         .unionAll(edges.select(F.col("v").alias("node")))
@@ -4407,25 +4257,7 @@ def graph_degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     reduction (handshake identity pins n_edges = sum(deg)/2 exactly);
     the histogram is a second bounded hash agg; density is one fixed
     IEEE chain over exact integers."""
-    from .helpers import materialize_reduced
-
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    a, b = li.alias("a"), li.alias("b")
-    edges = materialize_reduced(
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(
-            F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v")
-        )
-        .distinct()
-    )
+    edges = copurchase_edges(spark, sf_dir)
     deg = (
         edges.select(F.col("u").alias("node"))
         .unionAll(edges.select(F.col("v")))
@@ -4518,27 +4350,7 @@ def graph_jaccard_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame
     below their true coefficient — a deliberate, documented estimator,
     not the exact metric. Deterministic (capped_jaccard, a, b)
     top-50."""
-    from pyspark.sql import Window
-
-    from .helpers import materialize_reduced
-
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    a, b = li.alias("a"), li.alias("b")
-    edges = materialize_reduced(
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(
-            F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v")
-        )
-        .distinct()
-    )
+    edges = copurchase_edges(spark, sf_dir)
     # adj is derived twice (degrees, capped middles) but stays a cheap
     # projection of the CHECKPOINTED edges — materializing it too
     # double-buffers ~2|E| rows in block storage and OOMs a vanilla-heap
@@ -5111,43 +4923,7 @@ def graph_bipartite_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     (weight-1 pairs are noise and dominate the raw projection). One
     distinct pass, one bounded rank window per customer, one capped
     self-join."""
-    cp = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .join(
-            load_table(spark, sf_dir, "orders").select(
-                "o_orderkey", "o_custkey"
-            ),
-            F.col("o_orderkey") == F.col("l_orderkey"),
-        )
-        .select(
-            F.col("o_custkey").alias("cust"),
-            F.col("l_partkey").alias("part"),
-        )
-        .distinct()
-    )
-    capped = cp.select(
-        "cust",
-        "part",
-        F.row_number()
-        .over(Window.partitionBy("cust").orderBy("part"))
-        .alias("rn"),
-    ).filter(F.col("rn") <= 16)
-    capped = materialize_reduced(capped.select("cust", "part"))
-    a = capped.alias("a")
-    b = capped.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.cust") == F.col("b.cust"))
-            & (F.col("a.part") < F.col("b.part")),
-        )
-        .groupBy(
-            F.col("a.part").alias("part_a"), F.col("b.part").alias("part_b")
-        )
-        .agg(F.count("*").cast("bigint").alias("shared_customers"))
-        .filter(F.col("shared_customers") >= 2)
-    )
+    return shared_customer_projection(spark, sf_dir)
 
 
 @_q(
@@ -5784,48 +5560,8 @@ def graph_weighted_degree_strength(
     entries can never disagree on an edge); incidence is the two-way
     UNION ALL, all exact integers, no division. Output bounded by
     |distinct strength values|."""
-    cp = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .join(
-            load_table(spark, sf_dir, "orders").select(
-                "o_orderkey", "o_custkey"
-            ),
-            F.col("o_orderkey") == F.col("l_orderkey"),
-        )
-        .select(
-            F.col("o_custkey").alias("cust"),
-            F.col("l_partkey").alias("part"),
-        )
-        .distinct()
-    )
-    capped = cp.select(
-        "cust",
-        "part",
-        F.row_number()
-        .over(Window.partitionBy("cust").orderBy("part"))
-        .alias("rn"),
-    ).filter(F.col("rn") <= 16)
-    # KEPT materialized (r16 adjudication): this looks like the same
-    # self-join-side checkpoint class that lost in
-    # graph_common_neighbors/jaccard, but here the upstream being
-    # deduplicated — the lineitem x orders join + distinct + rank window
-    # — is expensive enough that recomputing it per side DOUBLES busy
-    # CPU (paired A/B: 1093 -> 2141 jiffies) at equal wall, so the
-    # barrier pays for itself.
-    capped = materialize_reduced(capped.select("cust", "part"))
-    a, b = capped.alias("a"), capped.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.cust") == F.col("b.cust"))
-            & (F.col("a.part") < F.col("b.part")),
-        )
-        .groupBy(
-            F.col("a.part").alias("part_a"), F.col("b.part").alias("part_b")
-        )
-        .agg(F.count("*").cast("bigint").alias("w"))
-        .filter(F.col("w") >= 2)
+    edges = shared_customer_projection(spark, sf_dir).withColumnRenamed(
+        "shared_customers", "w"
     )
     nodes = (
         edges.select(F.col("part_a").alias("part"), "w")
@@ -6429,23 +6165,7 @@ def graph_ktruss_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     Edge keys canonicalize lexically (LEAST/GREATEST), matching the
     u < v edge table. Exact integers end to end; output bounded by
     |distinct supports|."""
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.trim(F.col("text")) != ""
-    )
-    tok = docs.select(
-        "doc_id",
-        F.explode(_SPARK_TOKENS(F.lower(F.col("text")))).alias("token"),
-    ).distinct()
-    a, b = tok.alias("a"), tok.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.doc_id") == F.col("b.doc_id"))
-            & (F.col("a.token") < F.col("b.token")),
-        )
-        .select(F.col("a.token").alias("u"), F.col("b.token").alias("v"))
-        .distinct()
-    )
+    edges = token_edges(spark, sf_dir)
     edges = materialize_reduced(edges)
     deg = (
         edges.select(F.col("u").alias("node"))
@@ -7033,27 +6753,7 @@ def graph_two_hop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     bound validated first per the wave-3 note: hop2 rows are at most
     |V| * cap^2 before the distinct. Exact counts; one guarded
     division per histogram row."""
-    from pyspark.sql import Window
-
-    from .helpers import materialize_reduced
-
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    a, b = li.alias("a"), li.alias("b")
-    edges = materialize_reduced(
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(
-            F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v")
-        )
-        .distinct()
-    )
+    edges = copurchase_edges(spark, sf_dir)
     adj = edges.select(
         F.col("u").alias("node"), F.col("v").alias("nbr")
     ).unionAll(edges.select(F.col("v"), F.col("u")))

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from ..io import load_table
 from .helpers import DEC, dsum, materialize_reduced, sql_dsum
+from .sources import daily_cents, daily_revenue_cents
 
 QUERIES = {}
 ORACLES = {}
@@ -698,13 +699,7 @@ def window_kaufman_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combinable scan; the unpartitioned ORDER BY day window is
     safe because the reduced series is tiny at any corpus scale (shard
     by calendar year first if it ever were not)."""
-    o = load_table(spark, sf_dir, "orders").select(
-        F.to_date("o_orderdate").alias("day"),
-        F.col("o_totalprice").cast(DEC).alias("price"),
-    )
-    daily = o.groupBy("day").agg(
-        (F.sum("price") * 100).cast("bigint").alias("revenue_cents")
-    )
+    daily = daily_revenue_cents(spark, sf_dir)
     wday = Window.orderBy("day")
     seq = daily.select(
         "day",
@@ -785,13 +780,7 @@ def window_rsi_14(spark: SparkSession, sf_dir: str) -> DataFrame:
     portable; flat windows pin to the neutral 50). Companion to the
     Kaufman efficiency ratio: same exact-cents series, same
     |days|-bounded frame windows, a different momentum diagnostic."""
-    o = load_table(spark, sf_dir, "orders").select(
-        F.to_date("o_orderdate").alias("day"),
-        F.col("o_totalprice").cast(DEC).alias("price"),
-    )
-    daily = o.groupBy("day").agg(
-        (F.sum("price") * 100).cast("bigint").alias("revenue_cents")
-    )
+    daily = daily_revenue_cents(spark, sf_dir)
     wday = Window.orderBy("day")
     seq = daily.select(
         "day",
@@ -874,13 +863,7 @@ def window_turning_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-cents series family (Kaufman ER, RSI): same one-scan day
     reduction, two window lags, and a 6-column single-row census whose
     only float op is the final rate division."""
-    o = load_table(spark, sf_dir, "orders").select(
-        F.to_date("o_orderdate").alias("day"),
-        F.col("o_totalprice").cast(DEC).alias("price"),
-    )
-    daily = o.groupBy("day").agg(
-        (F.sum("price") * 100).cast("bigint").alias("revenue_cents")
-    )
+    daily = daily_revenue_cents(spark, sf_dir)
     wday = Window.orderBy("day")
     seq = daily.select(
         (
@@ -957,17 +940,7 @@ def window_sma_crossover(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition window is |days| rows at any data scale."""
     from pyspark.sql import Window
 
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.to_date("o_orderdate").alias("day"))
-        .agg(
-            F.sum(
-                F.round(F.col("o_totalprice") * 100, 0).cast("bigint")
-            )
-            .cast("bigint")
-            .alias("cents")
-        )
-    )
+    daily = daily_cents(spark, sf_dir)
     wd = Window.orderBy("day")
     w = daily.select(
         "day",
@@ -1125,15 +1098,7 @@ def window_donchian_channel(spark: SparkSession, sf_dir: str) -> DataFrame:
     channel excludes the current row by construction, ROWS 20 PRECEDING
     .. 1 PRECEDING). First row has no channel -> NULL flags, pinned
     identically in both engines."""
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.to_date("o_orderdate").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
-    )
+    daily = daily_cents(spark, sf_dir)
     w = Window.orderBy("day").rowsBetween(-20, -1)
     hi = F.max("cents").over(w)
     lo = F.min("cents").over(w)
@@ -1179,15 +1144,7 @@ def window_drawup_symmetry(spark: SparkSession, sf_dir: str) -> DataFrame:
     Runs both running extrema in ONE ordered window pass over the
     |days|-bounded exact-cents curve; everything is integer until the
     final ratio division."""
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.to_date("o_orderdate").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
-    )
+    daily = daily_cents(spark, sf_dir)
     w = Window.orderBy("day").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
@@ -1463,15 +1420,7 @@ def window_ema_macd(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropped tail mass is <2% for both spans). Budget: 2^20 x 1e10
     cents x 40 terms ~ 4e17 < 2^63. One window pass over the
     |days|-bounded series; the two EMAs share it."""
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.to_date("o_orderdate").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
-    )
+    daily = daily_cents(spark, sf_dir)
     w = Window.orderBy("day")
 
     def ema_terms(weights: list[int]):
@@ -1619,15 +1568,7 @@ def window_aroon_indicator(spark: SparkSession, sf_dir: str) -> DataFrame:
     the |days|-bounded series this runs on; a longer series bumps the
     literal. Positions are series positions (trading-day convention),
     not calendar gaps."""
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.to_date("o_orderdate").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
-    )
+    daily = daily_cents(spark, sf_dir)
     seq = daily.select(
         "day",
         "cents",
@@ -1706,15 +1647,7 @@ def window_stochastic_oscillator(spark: SparkSession, sf_dir: str) -> DataFrame:
     division — a float SMA over window rows would be frame-order-
     dependent. Both %K divisions are single identical IEEE chains on
     exact integers. Two window passes over the |days|-bounded series."""
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.to_date("o_orderdate").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
-    )
+    daily = daily_cents(spark, sf_dir)
     w = Window.orderBy("day").rowsBetween(-13, 0)
     frames = daily.select(
         "day",
@@ -1783,15 +1716,7 @@ def window_price_percentile_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     90-element arrays over the |days|-bounded series — negligible
     state; at corpus scale the daily rollup bounds everything
     upstream."""
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.to_date("o_orderdate").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
-    )
+    daily = daily_cents(spark, sf_dir)
     w = Window.orderBy("day").rowsBetween(-89, 0)
     framed = daily.select(
         "day", "cents", F.collect_list("cents").over(w).alias("lst")
@@ -1854,15 +1779,7 @@ def window_keltner_channel(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer 10-row frame sum with ONE division, NULL until the frame
     holds 10 deltas. Budget: 2^20 weights x ~1e10 daily cents x 32
     terms ~ 3e17 < 2^63 (same lattice budget as the graded MACD)."""
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.to_date("o_orderdate").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
-    )
+    daily = daily_cents(spark, sf_dir)
     w = Window.orderBy("day")
 
     num = F.lit(0).cast("bigint")
@@ -1965,15 +1882,7 @@ def window_streak_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     degenerate series; flat moves are excluded from the sign sequence,
     documented). Scale: every window runs on the |days|-bounded
     series."""
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.to_date("o_orderdate").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
-    )
+    daily = daily_cents(spark, sf_dir)
     w = Window.orderBy("day")
     moves = daily.select(
         "day",
@@ -2076,15 +1985,7 @@ def window_underwater_duration(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-episode table). Duration counts trading positions, not
     calendar days (documented). One running-max window + one
     row_number over the |days|-bounded series."""
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.to_date("o_orderdate").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
-    )
+    daily = daily_cents(spark, sf_dir)
     w = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
     curve = daily.select(
         "day",
@@ -2180,15 +2081,8 @@ def window_seasonal_decompose_daily(
     reduction is UNROLLED in fixed dow order on both sides (generated
     from the same loop). NULL-guarded for absent dows and zero raw
     variance."""
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.to_date("o_orderdate").alias("day"))
-        .agg(
-            F.expr(
-                "CAST(sum(CAST(round(o_totalprice * 100, 0) AS BIGINT))"
-                " AS BIGINT) div 100"
-            ).alias("dollars")
-        )
+    daily = daily_cents(spark, sf_dir).select(
+        "day", F.expr("cents div 100").alias("dollars")
     )
     keyed = daily.select(
         "dollars",
@@ -2290,15 +2184,8 @@ def agg_von_neumann_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     standing budget), reduced in one pass + one lag window over the
     |days|-bounded series; the ratio is a single fixed IEEE chain,
     NULL-guarded for constant series and the single-day degenerate."""
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.to_date("o_orderdate").alias("day"))
-        .agg(
-            F.expr(
-                "CAST(sum(CAST(round(o_totalprice * 100, 0) AS BIGINT))"
-                " AS BIGINT) div 100"
-            ).alias("dollars")
-        )
+    daily = daily_cents(spark, sf_dir).select(
+        "day", F.expr("cents div 100").alias("dollars")
     )
     w = Window.orderBy("day")
     seq = daily.select(
@@ -2383,15 +2270,8 @@ def agg_autocorr_lag_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pairs-based estimator: means over the PAIRED subsets.
     NULL-guarded degenerate variances. Three bounded joins + one 3-row
     rollup."""
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.to_date("o_orderdate").alias("day"))
-        .agg(
-            F.expr(
-                "CAST(sum(CAST(round(o_totalprice * 100, 0) AS BIGINT))"
-                " AS BIGINT) div 100"
-            ).alias("dollars")
-        )
+    daily = daily_cents(spark, sf_dir).select(
+        "day", F.expr("cents div 100").alias("dollars")
     )
     daily = materialize_reduced(daily)
     left = daily.select(
@@ -2457,15 +2337,7 @@ def window_roc_momentum(spark: SparkSession, sf_dir: str) -> DataFrame:
     structurally positive cents, NULL only on the warm-up rows where
     the lag is missing). One lag window over the |days|-bounded
     series; positions are series positions per the family convention."""
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.to_date("o_orderdate").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
-    )
+    daily = daily_cents(spark, sf_dir)
     w = Window.orderBy("day")
     lag12 = F.lag("cents", 12).over(w)
     return daily.select(
@@ -2564,19 +2436,6 @@ _DAILY_CENTS_SQL = """
 """
 
 
-def _daily_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared daily-revenue-cents series (the family's spine)."""
-    return (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.to_date("o_orderdate").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
-    )
-
-
 @_q(
     "window_williams_r",
     f"""
@@ -2623,7 +2482,7 @@ def window_williams_r(spark: SparkSession, sf_dir: str) -> DataFrame:
     and flat frames (ANSI totality); both divisions are single IEEE
     chains on exact integers snapped to the 1e-9 lattice. Two window
     passes over the |days|-bounded series."""
-    daily = _daily_cents(spark, sf_dir)
+    daily = daily_cents(spark, sf_dir)
     w = Window.orderBy("day").rowsBetween(-13, 0)
     frames = daily.select(
         "day",
@@ -2733,7 +2592,7 @@ def window_trix_indicator(spark: SparkSession, sf_dir: str) -> DataFrame:
     IEEE chain on them, NULL on the first row only (num > 0
     structurally: cents > 0 and w0 > 0). One window pass over the
     |days|-bounded series."""
-    daily = _daily_cents(spark, sf_dir)
+    daily = daily_cents(spark, sf_dir)
     w = Window.orderBy("day")
     num = F.lit(0).cast("bigint")
     den = F.lit(0).cast("bigint")
@@ -2800,7 +2659,7 @@ def window_ulcer_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     final division + sqrt. NULL on warm-up rows (frame < 14). Two
     window passes (running peak, then RMS frame) over the
     |days|-bounded series."""
-    daily = _daily_cents(spark, sf_dir)
+    daily = daily_cents(spark, sf_dir)
     p = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
     peak = F.max("cents").over(p)
     dd = daily.select(
@@ -2868,7 +2727,7 @@ def window_threshold_reversal_count(
     warm-up frames (<20 rows) are structurally excluded by the
     COUNT(*)=20 gate, keeping ANSI totality trivial. One window pass +
     one bounded month rollup."""
-    daily = _daily_cents(spark, sf_dir)
+    daily = daily_cents(spark, sf_dir)
     w = Window.orderBy("day").rowsBetween(-19, 0)
     full = F.count("*").over(w) == 20
     flags = daily.select(
@@ -3016,7 +2875,7 @@ def window_donchian_breakout_runs(
     within the breakout subsequence. Per run: start day, length, max
     overshoot above the prior high in exact cents. Three window passes
     + one bounded rollup over the |days|-bounded series."""
-    daily = _daily_cents(spark, sf_dir)
+    daily = daily_cents(spark, sf_dir)
     w = Window.orderBy("day").rowsBetween(-20, -1)
     flagged = daily.select(
         "day",
@@ -3084,7 +2943,7 @@ def window_chande_momentum(spark: SparkSession, sf_dir: str) -> DataFrame:
     warm-up frames (count of non-null deltas < 14) and on flat frames
     (su + sd = 0 — ANSI totality). One lag + one frame pass over the
     |days|-bounded series."""
-    daily = _daily_cents(spark, sf_dir)
+    daily = daily_cents(spark, sf_dir)
     w = Window.orderBy("day")
     lagc = F.lag("cents").over(w)
     # GREATEST ignores NULLs in BOTH engines (greatest(NULL, 0) = 0), which
@@ -3158,7 +3017,7 @@ def window_detrended_oscillator(
     exact sum, and rows whose displaced frame was not full (ln20 <>
     20) are NULL. One frame pass + one lag pass over the
     |days|-bounded series."""
-    daily = _daily_cents(spark, sf_dir)
+    daily = daily_cents(spark, sf_dir)
     w = Window.orderBy("day").rowsBetween(-19, 0)
     sma = daily.select(
         "day",
@@ -3430,7 +3289,7 @@ def window_hull_ma(spark: SparkSession, sf_dir: str) -> DataFrame:
     shorter than its span), so present-mass renormalization on partial
     frames is meaningless — warm-up rows report frame_n and NULL. One
     fixed num/12240/100 double chain on complete frames."""
-    daily = _daily_cents(spark, sf_dir)
+    daily = daily_cents(spark, sf_dir)
     w = Window.orderBy("day")
     num = None
     for k, c in enumerate(_HULL_C):
@@ -3699,7 +3558,7 @@ def window_donchian_width_percentile(
     250-frame materializes as a list and the count happens outside).
     Pure integer comparisons; one division by the always-positive
     history size. 250-element arrays over the |days|-bounded series."""
-    daily = _daily_cents(spark, sf_dir)
+    daily = daily_cents(spark, sf_dir)
     w20 = Window.orderBy("day").rowsBetween(-19, 0)
     widths = daily.select(
         "day",
@@ -4076,15 +3935,7 @@ def window_robust_frame_zscore(
     only float is the final guarded division (MAD = 0 on a
     majority-constant frame -> NULL, documented). 30-element arrays
     over the |days|-bounded spine."""
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.to_date("o_orderdate").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
-    )
+    daily = daily_cents(spark, sf_dir)
     w = Window.orderBy("day").rowsBetween(-29, 0)
     framed = daily.select(
         "day", "cents", F.collect_list("cents").over(w).alias("lst")
@@ -4195,17 +4046,7 @@ def window_coppock_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL roc/coppock, not phantom zeros (the chande lag-NULL lesson).
     One day rollup + one ordered window; at scale the unpartitioned
     ORDER BY day spine is |days| rows, driver-safe."""
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.to_date("o_orderdate").alias("day"))
-        .agg(
-            F.sum(
-                F.round(F.col("o_totalprice") * 100, 0).cast("bigint")
-            )
-            .cast("bigint")
-            .alias("cents")
-        )
-    )
+    daily = daily_cents(spark, sf_dir)
     w = Window.orderBy("day")
 
     def roc_fp(k):
@@ -4313,15 +4154,7 @@ def window_median_crossing_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     histogram is capped at 30 (the absence-streaks precedent, cap
     stated). Exact integers end to end, no division; the only
     unpartitioned windows ride the |days| spine."""
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.to_date("o_orderdate").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
-    )
+    daily = daily_cents(spark, sf_dir)
     daily = materialize_reduced(daily)
     per = daily.groupBy(F.col("cents").alias("v")).agg(
         F.count("*").cast("bigint").alias("c")
@@ -4638,13 +4471,7 @@ def window_connors_rsi(spark: SparkSession, sf_dir: str) -> DataFrame:
     Streak budget: |streak| <= |days|, every sum int64-trivial. One
     day rollup + five ordered windows over the bounded spine, no
     joins."""
-    o = load_table(spark, sf_dir, "orders").select(
-        F.to_date("o_orderdate").alias("day"),
-        F.col("o_totalprice").cast(DEC).alias("price"),
-    )
-    daily = o.groupBy("day").agg(
-        (F.sum("price") * 100).cast("bigint").alias("revenue_cents")
-    )
+    daily = daily_revenue_cents(spark, sf_dir)
     w = Window.orderBy("day")
     seq = daily.select(
         "day",

@@ -7,8 +7,11 @@ Usage:
 
 --repo selects which checkout's package to import (point it at a git
 worktree of the pre-change commit to capture "before" plans); --suffix
-names the output files <query>_<suffix>.txt. Plans are captured
-statically (no execution) at --sf-dir.
+names the output files <query>_<suffix>.txt. Plans are captured at
+--sf-dir without collecting the result, but building an entry is not
+always free of execution: every entry that calls materialize_reduced
+(an eager localCheckpoint) runs that job while its plan is built, so
+the captured plan reads the checkpointed blocks (Scan ExistingRDD).
 """
 from __future__ import annotations
 
